@@ -2,16 +2,20 @@ package graft.crypto
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim
 
 /** Column-level AES-GCM encrypt/decrypt as pure Catalyst expressions.
   *
   * Re-expression of the reference's per-column encryption loop
   * (/root/reference/src/parquet_writer.cpp:137-170 and
-  * parquet_reader.cpp:96-150) on Spark's codegen'd `aes_encrypt` /
-  * `aes_decrypt` builtins: each value becomes `[12B IV][ct][16B tag]`
-  * — the same wire layout — but the work is a narrow per-row map that
-  * rides inside WholeStageCodegen, introduces no shuffle, and scales
-  * embarrassingly parallel to any number of executors.
+  * parquet_reader.cpp:96-150) on graft's codegen'd [[AesGcm]] kernel
+  * ([[AesGcmEncrypt]] / [[AesGcmDecrypt]]): each value becomes
+  * `[12B IV][ct][16B tag]` — the same wire layout, and the one Spark's
+  * `aes_encrypt(…, 'GCM')` builtin writes, so datasets written with
+  * either open with the other — but the work is a narrow per-row map
+  * that rides inside WholeStageCodegen, reuses one cipher per thread,
+  * introduces no shuffle, and scales embarrassingly parallel to any
+  * number of executors.
   *
   * Keys enter the plan as [[KeyHandle]] nodes, never `lit(key)`: a key
   * literal would be rendered verbatim by `explain()`, the Spark UI SQL
@@ -22,19 +26,38 @@ object ColumnCrypto {
   private def keyCol(name: String, key: Array[Byte]) =
     KeyHandle.column(s"column:$name", key)
 
+  private val NoAad = lit(Array.emptyByteArray)
+
+  /** AES-GCM ciphertext (BINARY) of `value` — BINARY, or STRING taken
+    * as its UTF-8 bytes — under `key`, with `aad` bound into the tag. */
+  def encrypt(value: Column, key: Column, aad: Column = NoAad): Column =
+    graftshim.column(AesGcmEncrypt(graftshim.expression(value),
+      graftshim.expression(key), graftshim.expression(aad)))
+
+  /** Plaintext BINARY of a [[encrypt]] ciphertext; a wrong key, wrong
+    * `aad` or tampered byte fails the task. */
+  def decrypt(blob: Column, key: Column, aad: Column = NoAad): Column =
+    graftshim.column(AesGcmDecrypt(graftshim.expression(blob),
+      graftshim.expression(key), graftshim.expression(aad), failOnError = true))
+
+  /** [[decrypt]] that yields NULL instead of failing the task. */
+  def tryDecrypt(blob: Column, key: Column, aad: Column = NoAad): Column =
+    graftshim.column(AesGcmDecrypt(graftshim.expression(blob),
+      graftshim.expression(key), graftshim.expression(aad), failOnError = false))
+
   /** Encrypt `cols` in place (cast to string first so any input type
     * round-trips losslessly through ciphertext). Output type: BINARY.
     */
   def encryptColumns(df: DataFrame, keys: Map[String, Array[Byte]]): DataFrame =
     keys.foldLeft(df) { case (acc, (name, key)) =>
-      acc.withColumn(name, aes_encrypt(col(name).cast("string"), keyCol(name, key), lit("GCM")))
+      acc.withColumn(name, encrypt(col(name).cast("string"), keyCol(name, key)))
     }
 
   /** Decrypt BINARY ciphertext columns back to STRING (caller restores
     * the original type from the manifest). */
   def decryptColumns(df: DataFrame, keys: Map[String, Array[Byte]]): DataFrame =
     keys.foldLeft(df) { case (acc, (name, key)) =>
-      acc.withColumn(name, aes_decrypt(col(name), keyCol(name, key), lit("GCM")).cast("string"))
+      acc.withColumn(name, decrypt(col(name), keyCol(name, key)).cast("string"))
     }
 
   /** Decrypt that yields NULL (instead of failing the task) on a bad
@@ -42,7 +65,7 @@ object ColumnCrypto {
     * mode for exploratory reads. */
   def tryDecryptColumns(df: DataFrame, keys: Map[String, Array[Byte]]): DataFrame =
     keys.foldLeft(df) { case (acc, (name, key)) =>
-      acc.withColumn(name, try_aes_decrypt(col(name), keyCol(name, key), lit("GCM")).cast("string"))
+      acc.withColumn(name, tryDecrypt(col(name), keyCol(name, key)).cast("string"))
     }
 
   // -- AAD row binding ------------------------------------------------------
@@ -58,20 +81,17 @@ object ColumnCrypto {
   /** Encrypt `c` with the per-row `aad` (e.g. the primary key) bound
     * into the GCM auth tag. */
   def encryptBound(c: Column, name: String, key: Array[Byte], aad: Column): Column =
-    aes_encrypt(c.cast("string").cast("binary"), keyCol(name, key),
-      lit("GCM"), lit("DEFAULT"), lit(Array.empty[Byte]), aad.cast("string"))
+    encrypt(c.cast("string"), keyCol(name, key), aad.cast("string"))
 
   /** Decrypt a row-bound ciphertext; fails the task if `aad` does not
     * match what the value was encrypted under. */
   def decryptBound(c: Column, name: String, key: Array[Byte], aad: Column): Column =
-    aes_decrypt(c, keyCol(name, key), lit("GCM"), lit("DEFAULT"),
-      aad.cast("string")).cast("string")
+    decrypt(c, keyCol(name, key), aad.cast("string")).cast("string")
 
   /** NULL-on-mismatch variant — the audit-scan mode: NULLs mark rows
     * whose ciphertext was moved or tampered with. */
   def tryDecryptBound(c: Column, name: String, key: Array[Byte], aad: Column): Column =
-    try_aes_decrypt(c, keyCol(name, key), lit("GCM"), lit("DEFAULT"),
-      aad.cast("string")).cast("string")
+    tryDecrypt(c, keyCol(name, key), aad.cast("string")).cast("string")
 }
 
 /** Column masking (reference README "Future Improvements" row —

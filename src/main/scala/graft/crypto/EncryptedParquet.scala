@@ -6,20 +6,24 @@ import java.util.Base64
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Encrypted-columnar dataset: parquet data files + an AES-GCM-encrypted
   * JSON manifest, re-expressing the reference's file format
   * (/root/reference/src/parquet_writer.cpp:172-240: encrypted footer with
   * per-column key metadata + row count) Spark-first:
   *
-  *  - data path: configured columns are `aes_encrypt`-ed per row inside
-  *    the scan/write pipeline (codegen, no shuffle, no extra pass) and
+  *  - data path: configured columns are encrypted per row by graft's
+  *    AES-GCM kernel ([[ColumnCrypto]]) inside the scan/write pipeline
+  *    (codegen, one cipher per thread, no shuffle, no extra pass) and
   *    stored as parquet BINARY; everything else stays native parquet,
   *    so pushdown/pruning on unencrypted columns is preserved;
   *  - metadata path: column→key-resolution metadata (mode, wrapped DEK,
-  *    master key id, original type) goes into `_graft_manifest.enc`,
-  *    encrypted under the master key, alongside the data files (the "_"
-  *    prefix keeps every parquet reader from treating it as data);
+  *    master key id, original type) and the data files' schema go into
+  *    `_graft_manifest.enc`, encrypted under the master key, alongside
+  *    the data files (the "_" prefix keeps every parquet reader from
+  *    treating it as data);
   *  - read path: decrypt manifest → unwrap only the keys for REQUESTED
   *    columns → decrypt those; unrequested encrypted columns surface as
   *    the literal `[ENCRYPTED]`, exactly the reference reader's contract
@@ -36,7 +40,10 @@ object EncryptedParquet {
   final case class ColumnMeta(
       name: String, mode: String, origType: String,
       wrappedDek: Option[String], masterKeyId: Option[String])
-  final case class Manifest(rowCount: Long, masterKeyId: String, columns: Seq[ColumnMeta])
+  /** `schema` is the data files' parquet schema, so a read needs no
+    * schema-inference job; None for manifests written without it. */
+  final case class Manifest(rowCount: Long, masterKeyId: String, columns: Seq[ColumnMeta],
+      schema: Option[StructType] = None)
 
   // -- manifest JSON (hand-rolled: tiny, schema'd, zero extra deps) --------
   private def jstr(s: String): String =
@@ -54,7 +61,8 @@ object EncryptedParquet {
         c.masterKeyId.map(k => s"${jstr("master_key_id")}: ${jstr(k)}")
       base.mkString("{", ", ", "}")
     }.mkString("[", ", ", "]")
-    s"""{${jstr("row_count")}: ${m.rowCount}, ${jstr("master_key_id")}: ${jstr(m.masterKeyId)}, ${jstr("columns")}: $cols}"""
+    val schema = m.schema.map(st => s", ${jstr("schema")}: ${jstr(st.json)}").getOrElse("")
+    s"""{${jstr("row_count")}: ${m.rowCount}, ${jstr("master_key_id")}: ${jstr(m.masterKeyId)}, ${jstr("columns")}: $cols$schema}"""
   }
 
   private def parseManifest(json: String): Manifest = {
@@ -67,7 +75,8 @@ object EncryptedParquet {
         Option(c.get("wrapped_dek")).map(_.asText()),
         Option(c.get("master_key_id")).map(_.asText()))
     }
-    Manifest(root.get("row_count").asLong(), root.get("master_key_id").asText(), cols)
+    Manifest(root.get("row_count").asLong(), root.get("master_key_id").asText(), cols,
+      Option(root.get("schema")).map(n => DataType.fromJson(n.asText()).asInstanceOf[StructType]))
   }
 
   private def writeManifest(spark: SparkSession, dir: String, m: Manifest,
@@ -144,7 +153,10 @@ object EncryptedParquet {
     val manifest = Manifest(rowCount, config.masterKeyId,
       resolved.map { case (p, rk) =>
         ColumnMeta(p.column, rk.mode, origTypes(p.column), rk.wrappedDek, rk.masterKeyId)
-      })
+      },
+      // what a parquet read of the files would infer: file sources
+      // read every column as nullable
+      Some(graftshim.asNullable(encrypted.schema)))
     writeManifest(spark, dir, manifest, config.resolver)
     manifest
   }
@@ -157,7 +169,8 @@ object EncryptedParquet {
   def read(spark: SparkSession, dir: String, request: Seq[String],
       config: CryptoConfig): DataFrame = {
     val manifest = readManifest(spark, dir, config.masterKeyId, config.resolver)
-    val raw = spark.read.parquet(dir)
+    // the recorded schema spares a one-task inference job per read
+    val raw = manifest.schema.fold(spark.read)(spark.read.schema).parquet(dir)
     val byName = manifest.columns.map(c => c.name -> c).toMap
     val projected = raw.columns.toSeq.map { name =>
       byName.get(name).filter(_.mode != "plaintext") match {
@@ -165,7 +178,7 @@ object EncryptedParquet {
           val key = config.resolveKeyForRead(name, meta.mode, meta.wrappedDek, meta.masterKeyId)
           // key rides in a KeyHandle (redacted in every plan rendering),
           // never a Literal — see KeyHandle.scala
-          aes_decrypt(col(name), KeyHandle.column(s"column:$name", key), lit("GCM"))
+          ColumnCrypto.decrypt(col(name), KeyHandle.column(s"column:$name", key))
             .cast("string").cast(meta.origType).as(name)
         case Some(_) => lit(Placeholder).as(name)
         case None => col(name)
@@ -209,7 +222,7 @@ object EncryptedParquet {
         case _ => c
       }
     }
-    val next = Manifest(m.rowCount, newMasterKeyId, rotated)
+    val next = m.copy(masterKeyId = newMasterKeyId, columns = rotated)
     writeManifest(spark, dir, next, wrapWith)
     next
   }

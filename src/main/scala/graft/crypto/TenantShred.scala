@@ -54,7 +54,7 @@ object TenantShred {
     df.withColumn("tenant_id", col(tenantCol).cast("long"))
       .join(broadcast(keyDf), "tenant_id")
       .withColumn(sensitive,
-        aes_encrypt(col(sensitive).cast("string"), $"dek", lit("GCM")))
+        ColumnCrypto.encrypt(col(sensitive).cast("string"), $"dek"))
       .drop("dek")
       .write.mode("overwrite").parquet(s"$root/data")
   }
@@ -84,7 +84,7 @@ object TenantShred {
       .join(broadcast(keyDf), Seq("tenant_id"), "left")
       .withColumn(sensitive,
         when($"dek".isNotNull,
-          aes_decrypt(col(sensitive), $"dek", lit("GCM")).cast("string"))
+          ColumnCrypto.decrypt(col(sensitive), $"dek").cast("string"))
           .otherwise(lit(Masked)))
       .drop("dek")
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.OracleMath._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -613,15 +613,16 @@ object Advanced {
     // root node is 0 and its count is n) instead of a second pass.
     // the (g, l, node) aggregation key packs into ONE long — node < 2^26
     // (the declared universe), l ≤ 26 (5 bits), g is TPC-H CHAR(1) so its
-    // single ASCII code point (8 bits) round-trips via char(). A single
+    // single code point (8 bits) round-trips via char(). A single
     // long key halves the hash/compare/shuffle-key bytes of the two
     // aggregation stages that dominate this query (the 8.4M-row explode
-    // partial agg and the 2.2M-group final agg).
+    // partial agg and the 2.2M-group final agg). qdGroupCode fails the
+    // query on any row outside those bounds rather than alias nodes.
     val lv = Tables.lineitem(s, d)
       .select($"l_returnflag".as("g"),
         expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)").as("v"))
       .repartition(s.sparkContext.defaultParallelism, $"g", $"v")
-      .select(expr("ascii(g)").as("a"), $"v",
+      .select(qdGroupCode($"g", $"v").as("a"), $"v",
         explode(expr(s"sequence(0, $QdLevels, $QdStep)")).as("l"))
       .select(expr("shiftleft(shiftright(v, l), 13) + shiftleft(l, 8) + a").as("pk"))
     val sub0 = lv.groupBy($"pk").agg(count(lit(1)).as("sc"))
@@ -634,6 +635,22 @@ object Advanced {
     val nTot = Tables.lineitem(s, d)
       .groupBy($"l_returnflag".as("ng")).agg(count(lit(1)).as("n"))
     qdigestQuantiles(sub0, "l_returnflag", Some(nTot))
+  }
+
+  /** The group's code point for the packed Q-digest key, failing closed
+    * on the key's domain: `g` must be one character with code point
+    * 1..255 (8 bits that `char()` maps back) and `v` a cent value in
+    * [0, 2^26) (the node universe). Outside it, groups or nodes would
+    * silently alias in the packed long, so the query raises instead. */
+  private[graft] def qdGroupCode(g: Column, v: Column): Column = {
+    val a = ascii(g)
+    when(length(g) =!= 1 || a < 1 || a > 255,
+      raise_error(concat(lit("packed Q-digest key needs a 1-character group " +
+        "with code point 1..255, got: "), g)))
+      .when(v < 0 || v >= (1L << QdLevels),
+        raise_error(concat(lit("packed Q-digest key needs 0 <= v < 2^26 cents, got: "),
+          v.cast("string"))))
+      .otherwise(a)
   }
 
   /** Q-digest epilogue shared by the batch sketch and its streaming

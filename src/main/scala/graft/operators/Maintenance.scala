@@ -879,11 +879,10 @@ object Maintenance {
     * history see no row-level delta). After migration,
     * [[commitSnapshot]]'s fail-closed legacy-dv rule no longer blocks
     * rebases that retire data groups. Returns the committed version
-    * (the current one when nothing is legacy). Cost: one
-    * O(distinct file_keys) scan per legacy sidecar — positions are
-    * never materialized driver-side. */
+    * (the current one when nothing is legacy). Cost: the footer and
+    * file_key dictionary reads of [[graft.sources.DvSidecars.keyIndex]]
+    * per legacy sidecar — positions are never materialized driver-side. */
   def migrateDvReadSets(s: SparkSession, root: String): Int = {
-    import s.implicits._
     val cur = currentSnapshotVersion(root)
     val lines = manifestPaths(root, cur)
     val legacy = manifestRawLines(root, cur)
@@ -893,12 +892,10 @@ object Maintenance {
     def escapedTail(g: String): String =
       new org.apache.hadoop.fs.Path(g).toUri.toString.split('/').last
     val byTail = dataLines.map(g => escapedTail(g) -> g).toMap
-    val crypto = dataPlaneOptions(root)
     val annotated = legacy.map { l =>
       val sc = DvLine.sidecar(l)
-      val tails = s.read.options(crypto).parquet(sc)
-        .select($"file_key").distinct().collect().map(_.getString(0))
-        .map(_.takeWhile(_ != '/')).toSet
+      val tails = graft.sources.DvSidecars.keyIndex(s, root, Seq(sc)).keySet
+        .map(_.takeWhile(_ != '/'))
       val unknown = tails.filterNot(byTail.contains)
       require(unknown.isEmpty,
         s"dv sidecar $sc references groups not live at v$cur: $unknown")
@@ -1491,13 +1488,13 @@ object Maintenance {
     val (dvLines, dataLines) = lines.partition(_.startsWith("dv:"))
     if (dvLines.isEmpty) return None
     val dvPaths = dvLines.map(_.stripPrefix("dv:"))
-    // the touched-group set resolves driver-side from DISTINCT file
-    // keys — O(files with deletes), never O(positions) — with the same
-    // path-tail identity readSnapshotMoR uses
+    // the touched-group set resolves driver-side from the sidecars'
+    // file_key dictionaries — O(sidecar files) footer reads, no Spark
+    // job, never a position — with the same path-tail identity
+    // readSnapshotMoR uses
     val crypto = dataPlaneOptions(root)
-    val refKeys = s.read.options(crypto).parquet(dvPaths: _*)
-      .select($"file_key").distinct().collect().map(_.getString(0))
-      .map(_.takeWhile(_ != '/')).toSet
+    val refKeys = graft.sources.DvSidecars.keyIndex(s, root, dvPaths).keySet
+      .map(_.takeWhile(_ != '/'))
     // dv file_keys come from `_metadata.file_path`, which renders the
     // URI-ESCAPED form (a partition value with a space is "%20" there
     // but raw in the manifest's filesystem path) — compare the group's

@@ -145,7 +145,7 @@ private[graft] object FooterStats {
   /** Open a footer reader honoring any configured parquet decryption
     * factory — encrypted-data stores (r16) carry PME footers, and the
     * bare `open(InputFile)` overload never loads the factory. */
-  private def openReader(st: org.apache.hadoop.fs.FileStatus,
+  private[sources] def openReader(st: org.apache.hadoop.fs.FileStatus,
       conf: Configuration): ParquetFileReader = {
     val builder = org.apache.parquet.HadoopReadOptions.builder(conf, st.getPath)
     val fact = org.apache.parquet.crypto.DecryptionPropertiesFactory.loadFactory(conf)

@@ -1035,18 +1035,13 @@ private[sources] class GraftScan(store: GraftStore.Resolved,
     * positions themselves are loaded TASK-side by
     * [[GraftPositionReaderFactory]], each task reading only the
     * sidecar files that contain its own file's key (footer-filtered).
-    * The distinct() runs distributed; the collect ships file names. */
-  private def dvKeyIndex(paths: Seq[String]): Map[String, Seq[String]] =
-    if (paths.isEmpty) Map.empty
-    else {
-      import org.apache.spark.sql.functions.col
-      val rows = spark.read.options(store.cryptoOpts).parquet(paths: _*)
-        .select(col("file_key"), col("_metadata.file_path").as("sidecar_file"))
-        .distinct().collect()
-      GraftScanCounters.driverDvIndexRows.addAndGet(rows.length)
-      rows.toSeq.map(r => (r.getString(0), r.getString(1)))
-        .groupBy(_._1).map { case (k, fs) => k -> fs.map(_._2).sorted }
-    }
+    * Built from the sidecars' footers and file_key dictionaries
+    * ([[DvSidecars.keyIndex]]): no Spark job in the common case. */
+  private def dvKeyIndex(paths: Seq[String]): Map[String, Seq[String]] = {
+    val idx = DvSidecars.keyIndex(spark, store.root, paths)
+    GraftScanCounters.driverDvIndexRows.addAndGet(idx.valuesIterator.map(_.size).sum)
+    idx
+  }
 
   /** True iff a removal commit PROVABLY preserves rows — the DV-fold
     * compaction shape (r14 verdict #9): no new deletes, at least one
@@ -1361,17 +1356,105 @@ private[sources] class SerializableHadoopConf(
   }
 }
 
-/** Task-side DV sidecar access: read `(file_key, row_index)` rows of
-  * the given sidecar parquet files, keeping only `key`'s positions.
-  * Uses parquet's own record filter, so row groups whose file_key
-  * stats exclude the key are skipped on footer arithmetic alone; a
-  * task's cost is its own file's churn, not the sidecar pile. */
-private[sources] object DvSidecars {
+/** DV sidecar access. Sidecars are parquet files of
+  * `(file_key, row_index)` positions.
+  *
+  * Driver side, [[keyIndex]] answers which sidecar files name which
+  * data file from footers and dictionary pages alone. Task side,
+  * [[positionsFor]] loads one data file's positions with parquet's own
+  * record filter, so row groups whose file_key stats exclude the key
+  * are skipped on footer arithmetic alone; a task's cost is its own
+  * file's churn, not the sidecar pile. */
+private[graft] object DvSidecars {
   import org.apache.parquet.filter2.compat.FilterCompat
   import org.apache.parquet.filter2.predicate.FilterApi
   import org.apache.parquet.hadoop.ParquetReader
   import org.apache.parquet.hadoop.example.GroupReadSupport
   import org.apache.parquet.io.api.Binary
+
+  /** file_key -> the sidecar files (sorted, in the URI rendering of
+    * `_metadata.file_path`) under `dirs` that carry positions for it.
+    *
+    * Each row group's file_key chunk answers from metadata alone: a
+    * chunk whose footer min equals its max holds that one key (a
+    * row-level write's sidecar file serves one data file, and parquet
+    * writes a one- or few-value chunk PLAIN, so this is the common
+    * case); otherwise a dictionary-encoded chunk's dictionary page holds
+    * exactly its distinct keys. So the index costs one footer, plus a
+    * dictionary page per multi-key row group: zero Spark jobs,
+    * O(sidecar files) I/O, never a position. A file with a multi-key
+    * chunk whose encoding stats show a non-dictionary page (dictionary
+    * disabled, or the writer fell back from it) is resolved with a
+    * distinct job over just such files. */
+  def keyIndex(spark: SparkSession, root: String,
+      dirs: Seq[String]): Map[String, Seq[String]] =
+    if (dirs.isEmpty) Map.empty
+    else {
+      val conf = Maintenance.storeHadoopConf(spark, root)
+      // (file status, the file as `_metadata.file_path` renders it:
+      // the qualified directory's URI plus the name)
+      val files = dirs.flatMap { d =>
+        val p = new Path(d)
+        val fs = p.getFileSystem(conf)
+        val dir = fs.makeQualified(p)
+        fs.listStatus(dir).toSeq.collect {
+          case st if st.isFile && !st.getPath.getName.startsWith("_") &&
+              !st.getPath.getName.startsWith(".") =>
+            (st, new Path(dir, st.getPath.getName).toUri.toString)
+        }
+      }
+      val fromFooters = files.map { case (st, f) => (f, footerKeys(st, conf)) }
+      val undecided = fromFooters.collect { case (f, None) => f }
+      val fallback =
+        if (undecided.isEmpty) Seq.empty
+        else {
+          import org.apache.spark.sql.functions.col
+          spark.read.options(Maintenance.dataPlaneOptions(root)).parquet(undecided: _*)
+            .select(col("file_key"), col("_metadata.file_path"))
+            .distinct().collect().toSeq.map(r => (r.getString(0), r.getString(1)))
+        }
+      val pairs = fromFooters.flatMap { case (f, keys) =>
+        keys.getOrElse(Set.empty).map(k => (k, f))
+      } ++ fallback
+      pairs.groupBy(_._1).map { case (k, fs) => k -> fs.map(_._2).sorted }
+    }
+
+  /** The distinct file_keys of one sidecar file from its footer and
+    * dictionary pages; None when a multi-key row group's file_key chunk
+    * has a non-dictionary data page (or no encoding stats to prove it
+    * has none). */
+  private def footerKeys(st: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration): Option[Set[String]] = {
+    val reader = FooterStats.openReader(st, conf)
+    try {
+      val desc = reader.getFileMetaData.getSchema.getColumnDescription(Array("file_key"))
+      val keys = Set.newBuilder[String]
+      val exact = reader.getFooter.getBlocks.asScala.forall { block =>
+        block.getRowCount == 0 || {
+          val chunk = block.getColumns.asScala.find(_.getPath.toDotString == "file_key").get
+          val minMax = chunk.getStatistics
+          val encodings = chunk.getEncodingStats
+          if (minMax != null && minMax.hasNonNullValue &&
+              minMax.genericGetMin == minMax.genericGetMax) {
+            keys += minMax.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8
+            true
+          } else if (encodings != null && encodings.hasDictionaryPages &&
+              !encodings.hasNonDictionaryEncodedPages) {
+            // the public interface: the concrete reader class is package-private
+            val pages: org.apache.parquet.column.page.DictionaryPageReadStore =
+              reader.getDictionaryReader(block)
+            val page = pages.readDictionaryPage(desc)
+            page != null && {
+              val dict = page.getEncoding.initDictionary(desc, page)
+              (0 to dict.getMaxId).foreach(i => keys += dict.decodeToBinary(i).toStringUsingUTF8)
+              true
+            }
+          } else false
+        }
+      }
+      if (exact) Some(keys.result()) else None
+    } finally reader.close()
+  }
 
   /** Sorted (ascending, possibly duplicated) positions of `key`. */
   def positionsFor(files: Seq[String], key: String,

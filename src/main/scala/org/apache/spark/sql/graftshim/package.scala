@@ -11,6 +11,11 @@ package object graftshim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The schema a file-source read reports for data written as `st`:
+    * every field, nested ones included, nullable. */
+  def asNullable(st: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = st.asNullable
+
   /** Wrap a logical plan as a DataFrame (route custom LogicalPlan nodes
     * into a session) — the `Dataset.ofRows` path Spark's own components
     * use, reached through the sql package. */

@@ -94,6 +94,20 @@ class AdvancedSpec extends AnyFunSuite {
     }
   }
 
+  test("packed Q-digest key fails closed on a two-character group or an out-of-range value") {
+    import spark.implicits._
+    val code = operators.Advanced.qdGroupCode($"g", $"v")
+    // in-domain rows pack: the group's code point, max cent value 2^26 - 1
+    assert(Seq(("A", 0L), ("R", (1L << 26) - 1)).toDF("g", "v")
+      .select(code).as[Int].collect().toSeq == Seq(65, 82))
+    for ((g, v) <- Seq(("AB", 5L), ("", 5L), ("A", 1L << 26), ("A", -1L))) {
+      val e = intercept[Exception] {
+        Seq((g, v)).toDF("g", "v").select(code).collect()
+      }
+      assert(e.getMessage.contains("packed Q-digest key"), s"($g, $v): ${e.getMessage}")
+    }
+  }
+
   test("q_pivot_native row sums equal the group totals") {
     val pivoted = q("q_pivot_native").collect()
       .map(r => r.getString(0) -> (r.getDouble(1) + r.getDouble(2) + r.getDouble(3))).toMap

@@ -60,6 +60,11 @@ class CryptoSpec extends AnyFunSuite {
     val keys = Map("c_name" -> keyUtf8.getBytes("UTF-8"))
     val enc = ColumnCrypto.encryptColumns(cust.limit(5), keys)
     val dec = ColumnCrypto.decryptColumns(enc, keys)
+    // the AAD-bound and try forms of the kernel
+    val bound = cust.limit(5).select(col("c_custkey"), ColumnCrypto.encryptBound(
+      col("c_name"), "c_name", keys("c_name"), col("c_custkey")).as("ct"))
+    val tried = bound.select(ColumnCrypto.tryDecryptBound(
+      col("ct"), "c_name", keys("c_name"), col("c_custkey")).as("c_name"))
 
     // selective-read path too (EncryptedParquet.read resolves + injects keys)
     val out = tmp("noleak")
@@ -73,7 +78,7 @@ class CryptoSpec extends AnyFunSuite {
         .find(_.name == "c_mktsegment").flatMap(_.wrappedDek),
       Some("mk-noleak")).map(b => f"$b%02x").mkString
 
-    for (df <- Seq(enc, dec, sel)) {
+    for (df <- Seq(enc, dec, sel, tried)) {
       val renderings = Seq(
         df.queryExecution.explainString(ExplainMode.fromString("extended")),
         df.queryExecution.explainString(ExplainMode.fromString("formatted")),
@@ -83,9 +88,15 @@ class CryptoSpec extends AnyFunSuite {
         assert(!r.toLowerCase.contains(leak.toLowerCase),
           s"key material leaked into plan rendering:\n$r")
       }
-      // the redacted handle is what should appear instead
+      // the redacted handle is what should appear instead, under
+      // graft's AES-GCM kernel node
+      val executed = df.queryExecution.executedPlan.toString
       assert(df.queryExecution.analyzed.toString.contains("graft_key("),
         "expected the KeyHandle label in the plan")
+      assert(executed.contains("graft_aes_gcm_") || executed.contains("graft_try_aes_gcm_"),
+        s"expected the AES-GCM kernel node in the executed plan:\n$executed")
+      assert(!executed.contains("aes_encrypt") && !executed.contains("aes_decrypt"),
+        s"Spark's aes builtins must not run on the data path:\n$executed")
     }
     // and the data path still works end-to-end with redacted handles
     assert(sel.select("c_name").na.drop().count() == 5)
@@ -123,19 +134,8 @@ class CryptoSpec extends AnyFunSuite {
 
     // rotation must be a pure driver-side metadata operation: zero
     // Spark jobs — the 100 TB of data files is never re-read
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    Thread.sleep(300) // drain events from the write above (async bus)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      EncryptedParquet.rotateMasterKey(spark, out, cfg, "master-new")
-      Thread.sleep(300) // let any (unexpected) job events land
-      assert(jobs.get() == 0,
-        s"rotation must not touch data (0 jobs), saw ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, jobs) = jobsDuring(EncryptedParquet.rotateMasterKey(spark, out, cfg, "master-new"))
+    assert(jobs == 0, s"rotation must not touch data (0 jobs), saw $jobs")
 
     val newCfg = cfg.copy(masterKeyId = "master-new")
     assert(EncryptedParquet.readAll(spark, out, newCfg)
@@ -155,8 +155,13 @@ class CryptoSpec extends AnyFunSuite {
     val raw = EncryptedParquet.rawManifestBytes(spark, out)
     assert(!new String(raw.drop(12), "ISO-8859-1").contains("c_name"),
       "manifest plaintext leaked")
+    assert(!new String(raw.drop(12), "ISO-8859-1").contains("c_custkey"),
+      "manifest schema leaked")
     val m = EncryptedParquet.readManifest(spark, out, "master-A")
     assert(m.columns.map(_.name) == Seq("c_name") && m.rowCount == 50)
+    // the recorded schema is the files' own: encrypted columns BINARY
+    assert(m.schema.contains(spark.read.parquet(out).schema), s"schema: ${m.schema}")
+    assert(m.schema.get("c_name").dataType == org.apache.spark.sql.types.BinaryType)
     intercept[Exception] { EncryptedParquet.readManifest(spark, out, "master-B") }
   }
 
@@ -164,35 +169,14 @@ class CryptoSpec extends AnyFunSuite {
     val out = tmp("singlepass")
     val cfg = CryptoConfig("m",
       Seq(ColumnPolicy("c_name", explicitKey = Some("0123456789abcdef"))))
-    // scope the count to THIS test's job group: the listener bus is
-    // shared and async, so late-dispatched events from earlier tests in
-    // the session would otherwise flake an exact-count assertion
-    val group = "graft-singlepass-" + System.nanoTime()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // shuffle-free single-stage input: the write plan is exactly one
-      // job, so a manifest-count re-read would show as a second job
-      spark.sparkContext.setJobGroup(group, "single-pass write spec")
-      val df = spark.range(40).selectExpr("id", "concat('name-', id) AS c_name")
-      val m = EncryptedParquet.write(df, out, cfg)
-      assert(m.rowCount == 40, "observed row count must match the data written")
-      // listener bus is async — give posted events a beat to drain
-      val deadline = System.currentTimeMillis() + 2000
-      while (jobs.get() < 1 && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      Thread.sleep(200)
-      assert(jobs.get() == 1,
-        s"write must be ONE pass over the data (row count via observe, " +
-          s"not a re-read), saw ${jobs.get()} jobs")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    // shuffle-free single-stage input: the write plan is exactly one
+    // job, so a manifest-count re-read would show as a second job
+    val df = spark.range(40).selectExpr("id", "concat('name-', id) AS c_name")
+    val (m, jobs) = jobsDuring(EncryptedParquet.write(df, out, cfg))
+    assert(m.rowCount == 40, "observed row count must match the data written")
+    assert(jobs == 1,
+      s"write must be ONE pass over the data (row count via observe, " +
+        s"not a re-read), saw $jobs jobs")
   }
 
   test("selective read: unrequested columns are the [ENCRYPTED] placeholder") {
@@ -201,7 +185,9 @@ class CryptoSpec extends AnyFunSuite {
       Seq(ColumnPolicy("c_name", explicitKey = Some("0123456789abcdef")),
         ColumnPolicy("c_acctbal", explicitKey = Some("abcdef0123456789"))))
     EncryptedParquet.write(cust.limit(20), out, cfg)
-    val df = EncryptedParquet.read(spark, out, Seq("c_acctbal"), cfg)
+    // planning the read runs no job: the schema comes from the manifest
+    val (df, jobs) = jobsDuring(EncryptedParquet.read(spark, out, Seq("c_acctbal"), cfg))
+    assert(jobs == 0, s"read planning ran $jobs jobs (schema inference?)")
     val row = df.select(col("c_name"), col("c_acctbal")).limit(1).collect()(0)
     assert(row.getString(0) == EncryptedParquet.Placeholder)
     assert(!row.isNullAt(1)) // requested column decrypted to its orig double type
@@ -218,6 +204,117 @@ class CryptoSpec extends AnyFunSuite {
     val tried = ColumnCrypto.tryDecryptColumns(enc, wrong)
       .select(col("c_name")).collect()
     assert(tried.forall(_.isNullAt(0)))
+    // AES takes 16, 24 or 32 key bytes; any other length is rejected
+    for (n <- Seq(0, 15, 17, 33)) {
+      val bad = Map("c_name" -> Array.fill[Byte](n)(7))
+      intercept[Exception] { ColumnCrypto.encryptColumns(cust.limit(5), bad).collect() }
+      intercept[Exception] { ColumnCrypto.decryptColumns(enc, bad).collect() }
+      assert(ColumnCrypto.tryDecryptColumns(enc, bad).select(col("c_name"))
+        .collect().forall(_.isNullAt(0)))
+    }
+    for (n <- Seq(16, 24, 32)) {
+      val ok = Map("c_name" -> Array.fill[Byte](n)(7))
+      val back = ColumnCrypto.decryptColumns(ColumnCrypto.encryptColumns(cust.limit(5), ok), ok)
+      assert(back.select("c_name").collect().map(_.getString(0)).toSeq ==
+        cust.limit(5).select("c_name").collect().map(_.getString(0)).toSeq)
+    }
+  }
+
+  test("kernel: one flipped IV, ciphertext or tag byte fails the task; try reads NULL") {
+    import spark.implicits._
+    val key = "0123456789abcdef".getBytes("UTF-8")
+    val ct = Seq("a secret value").toDF("v")
+      .select(ColumnCrypto.encrypt($"v", lit(key))).as[Array[Byte]].collect()(0)
+    assert(ct.length == AesGcm.IvLen + "a secret value".length + AesGcm.TagLen)
+    for (at <- Seq(0, AesGcm.IvLen - 1, AesGcm.IvLen, ct.length - AesGcm.TagLen - 1,
+        ct.length - AesGcm.TagLen, ct.length - 1)) {
+      val bad = ct.clone()
+      bad(at) = (bad(at) ^ 0x01).toByte
+      val df = Seq(bad).toDF("ct")
+      intercept[Exception] { df.select(ColumnCrypto.decrypt($"ct", lit(key))).collect() }
+      assert(df.select(ColumnCrypto.tryDecrypt($"ct", lit(key))).collect()(0).isNullAt(0),
+        s"flipped byte $at must read as NULL through the try path")
+    }
+    // a blob too short to hold IV + tag fails the same way
+    intercept[Exception] {
+      Seq(ct.take(20)).toDF("ct").select(ColumnCrypto.decrypt($"ct", lit(key))).collect()
+    }
+    // the untouched blob still opens
+    assert(Seq(ct).toDF("ct").select(ColumnCrypto.decrypt($"ct", lit(key)).cast("string"))
+      .as[String].collect().toSeq == Seq("a secret value"))
+  }
+
+  test("kernel: 100,000 encryptions under one key give 100,000 distinct IVs") {
+    // a literal key and a constant input: the encryption must still run
+    // per row (never constant-folded) with a fresh IV each time
+    val key = "0123456789abcdef".getBytes("UTF-8")
+    val n = 100000
+    val ivs = spark.range(n).select(
+      substring(ColumnCrypto.encrypt(lit("same plaintext"), lit(key)), 1, AesGcm.IvLen).as("iv"))
+    assert(ivs.agg(countDistinct(col("iv")), min(length(col("iv")))).collect()(0) ==
+      org.apache.spark.sql.Row(n.toLong, AesGcm.IvLen))
+  }
+
+  test("kernel ciphertext opens with Spark's aes_decrypt(…, 'GCM') and the reverse, AAD too") {
+    import spark.implicits._
+    val key = "0123456789abcdef0123456789abcdef".getBytes("UTF-8")
+    val df = Seq((1L, "alice"), (2L, ""), (3L, "x" * 5000)).toDF("id", "v")
+    // kernel -> Spark builtin
+    val k2s = df.select($"id", $"v",
+      ColumnCrypto.encrypt($"v", lit(key)).as("ct"),
+      ColumnCrypto.encrypt($"v", lit(key), $"id".cast("string")).as("ct_aad"))
+      .select($"v",
+        aes_decrypt($"ct", lit(key), lit("GCM")).cast("string").as("plain"),
+        aes_decrypt($"ct_aad", lit(key), lit("GCM"), lit("DEFAULT"),
+          $"id".cast("string")).cast("string").as("plain_aad"))
+      .collect()
+    assert(k2s.forall(r => r.getString(0) == r.getString(1) && r.getString(0) == r.getString(2)))
+    // Spark builtin -> kernel
+    val s2k = df.select($"id", $"v",
+      aes_encrypt($"v", lit(key), lit("GCM")).as("ct"),
+      aes_encrypt($"v", lit(key), lit("GCM"), lit("DEFAULT"), lit(Array.emptyByteArray),
+        $"id".cast("string")).as("ct_aad"))
+      .select($"v",
+        ColumnCrypto.decrypt($"ct", lit(key)).cast("string").as("plain"),
+        ColumnCrypto.decrypt($"ct_aad", lit(key), $"id".cast("string")).cast("string")
+          .as("plain_aad"),
+        // the wrong row identity does not open an AAD-bound value
+        ColumnCrypto.tryDecrypt($"ct_aad", lit(key), ($"id" + 1).cast("string")).as("moved"))
+      .collect()
+    assert(s2k.forall(r => r.getString(0) == r.getString(1) && r.getString(0) == r.getString(2)
+      && r.isNullAt(3)))
+  }
+
+  test("datasets written with Spark's aes_encrypt and a schema-less manifest still decrypt") {
+    import spark.implicits._
+    // the earlier on-disk format: data columns under the builtin, and a
+    // manifest without the schema field
+    val out = tmp("legacy_format")
+    val keyUtf8 = "0123456789abcdef"
+    val cfg = CryptoConfig("master-legacy",
+      Seq(ColumnPolicy("c_name", explicitKey = Some(keyUtf8)),
+        ColumnPolicy("c_acctbal", explicitKey = Some("abcdef0123456789"))))
+    val src = cust.limit(20)
+    EncryptedParquet.write(src, out, cfg)
+    src.withColumn("c_name", aes_encrypt($"c_name".cast("string"), lit(keyUtf8), lit("GCM")))
+      .withColumn("c_acctbal", aes_encrypt($"c_acctbal".cast("string"),
+        lit("abcdef0123456789"), lit("GCM")))
+      .write.mode("overwrite").parquet(s"$out.data")
+    val manifestFile = new java.io.File(out, "_graft_manifest.enc")
+    val mk = DemoMasterKeyResolver.resolve("master-legacy")
+    val json = new String(AesGcm.decrypt(mk, EncryptedParquet.rawManifestBytes(spark, out)), "UTF-8")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(node.has("schema"))
+    node.remove("schema")
+    graft.Staging.rmTree(new java.io.File(out))
+    new java.io.File(s"$out.data").renameTo(new java.io.File(out))
+    java.nio.file.Files.write(manifestFile.toPath, java.util.Base64.getEncoder.encode(
+      AesGcm.encrypt(mk, node.toString.getBytes("UTF-8"))))
+    assert(EncryptedParquet.readManifest(spark, out, "master-legacy").schema.isEmpty)
+    val back = EncryptedParquet.readAll(spark, out, cfg)
+    assert(back.schema("c_acctbal").dataType == src.schema("c_acctbal").dataType)
+    assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
   }
 
   test("nulls and empties survive encrypt→decrypt (reference sparse-row cases)") {
@@ -343,5 +440,14 @@ class CryptoSpec extends AnyFunSuite {
       .select($"c_custkey", $"c_name".as("dec"))
       .join(cust.select($"c_custkey", $"c_name"), "c_custkey")
     assert(live.filter($"dec" =!= $"c_name").count() == 0, "live tenants must round-trip")
+    // each row sits under its own tenant's DEK, in the layout Spark's
+    // builtin opens too
+    val deks = spark.read.parquet(s"$root/keystore").as[(Long, String)].collect()
+      .map { case (t, w) => (t, Kms.unwrapFromBase64(w, "mk-tenant-shred")) }.toSeq
+      .toDF("tenant_id", "dek")
+    val viaBuiltin = spark.read.parquet(s"$root/data").join(deks, "tenant_id")
+      .select($"c_custkey", aes_decrypt($"c_name", $"dek", lit("GCM")).cast("string").as("dec"))
+      .join(cust.select($"c_custkey", $"c_name"), "c_custkey")
+    assert(viaBuiltin.count() > 0 && viaBuiltin.filter($"dec" =!= $"c_name").count() == 0)
   }
 }

@@ -17,6 +17,29 @@ object TestSession {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` and counts the Spark jobs it started. The count is
+    * scoped to a fresh job group, so late events from earlier work on
+    * the shared (async) listener bus never land in it. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val group = "graft-jobs-" + System.nanoTime()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "job count")
+    try {
+      val r = body
+      Thread.sleep(300) // let posted job events reach the listener
+      (r, jobs.get())
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }
 
 /** Every declared query must run and return rows on sf0.001, and every

@@ -86,6 +86,18 @@ class Round12Spec extends AnyFunSuite {
     intercept[java.security.GeneralSecurityException] {
       EncryptedParquet.readManifest(spark, dir, cfg.masterKeyId)
     }
+    // the recorded schema is the plaintext's tail: a flip inside it
+    // fails the same way, so a tampered schema never reaches a read
+    EncryptedParquet.write(Tables.customer(spark, sf).limit(50), dir, cfg)
+    val blob = EncryptedParquet.rawManifestBytes(spark, dir)
+    val at = blob.length - AesGcm.TagLen - 20
+    blob(at) = (blob(at) ^ 0x01).toByte
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_graft_manifest.enc"),
+      java.util.Base64.getEncoder.encode(blob))
+    new java.io.File(dir, "._graft_manifest.enc.crc").delete() // stale checksum
+    intercept[java.security.GeneralSecurityException] {
+      EncryptedParquet.readManifest(spark, dir, cfg.masterKeyId)
+    }
     // and the driver-gate query itself reports fail-closed on stage 2
     val q = SparkEntry.queries("crypto_footer_tamper")(spark, sf).collect()
     val tampered = q.find(_.getString(0) == "2_tampered").get
